@@ -4,7 +4,10 @@ arithmetic must scale the way the docstring derives it."""
 
 from __future__ import annotations
 
-from wikipedia_org_xmldump_importer_spark.session import cluster_conf
+from wikipedia_org_xmldump_importer_spark.session import (
+    WINDOW_EXEC_LOGGER,
+    cluster_conf,
+)
 
 
 def test_sizing_arithmetic():
@@ -50,3 +53,14 @@ def test_profile_is_accepted_by_a_live_session(spark):
                 spark.conf.set(k, v)
             else:
                 spark.conf.unset(k)
+
+
+def test_window_exec_warning_silenced_only_at_its_logger(spark):
+    # build_session raises the WindowExec "No Partition Defined" logger to
+    # ERROR; every other logger keeps the session's WARN level.
+    log_manager = spark._jvm.org.apache.logging.log4j.LogManager
+    level = log_manager.getLogger(WINDOW_EXEC_LOGGER).getLevel().toString()
+    assert level == "ERROR"
+    assert log_manager.getRootLogger().getLevel().toString() == "WARN"
+    sibling = "org.apache.spark.sql.execution.window.WindowExecBase"
+    assert log_manager.getLogger(sibling).getLevel().toString() == "WARN"

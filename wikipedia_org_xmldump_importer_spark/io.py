@@ -5,16 +5,23 @@ SURVEY.md §2.1 (s1 scan_parquet, s4 sink_parquet, s5 sink_jdbc).
 100 TB notes: parquet scans here are plain ``spark.read.parquet`` so Catalyst
 DSv2 pushdown (predicates, column pruning, partition pruning) applies
 untouched — every downstream operator's filters reach the row-group level.
-Schema inference on parquet is footer-only (no data pass), so no explicit
-StructType is needed for these tables; XML ingestion (sources/xml_pages.py)
-DOES pin an explicit schema because XML inference is a full extra pass.
+Parquet schema inference reads only footers, but it still launches one Spark
+job per ``spark.read.parquet`` call, so ``load_table`` infers each table's
+schema once and pins Spark's own inferred StructType on later reads of the
+same unchanged files (``_read_parquet``). XML ingestion
+(sources/xml_pages.py) pins an explicit schema up front because XML
+inference is a full extra pass over the data.
 """
 
 from __future__ import annotations
 
+import math
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -60,7 +67,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the bare path — same files, same schema, but Catalyst sees rowCount /
     size / column stats, so CBO join reordering and stats-based broadcast
     decisions fire. Unregistered sessions (the driver's harness) take the
-    path branch — plans unchanged.
+    path branch, which reads through ``_read_parquet``: the first read of a
+    path infers its schema (one Spark job) and later reads pin that cached
+    schema, so they launch no job. Rewriting, adding or removing a data
+    file under the path, or changing one of the session confs that shape
+    parquet inference (``_INFER_CONFS``), invalidates the cached schema.
     """
     from .cbo import registered_dir  # noqa: PLC0415 — io<->cbo cycle at import
 
@@ -68,7 +79,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from_catalog = registered_dir(spark, name) == sf_dir
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.table(name) if from_catalog else spark.read.parquet(path)
+        df = spark.table(name) if from_catalog else _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, LongType):
             # TIMESTAMP(NANOS) footer → epoch-nanos long; truncate ns→us
             # exactly like DuckDB (integer div, no float rounding).
@@ -88,7 +99,77 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     if from_catalog:
         return spark.table(name)
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+# Session confs that change the schema parquet inference returns; a cached
+# schema is reused only under the values it was inferred with.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# path -> (cache key, Spark's inferred schema); one entry per path, so a
+# rewritten file replaces its entry rather than adding one.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that launches no schema-inference job
+    after the first read of the same files under the same inference confs.
+
+    The cached schema is Spark's own ``df.schema`` from that first read, so
+    the pinned read plans exactly like an inferred one. The key is the data
+    files' ``(path, size, mtime_ns)`` plus the ``_INFER_CONFS`` values; a
+    path that is not locally inspectable (remote filesystem) is read
+    uncached."""
+    files = _local_data_files(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (tuple(sorted(files)), tuple(spark.conf.get(k) for k in _INFER_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
+def _local_data_files(path: str) -> list[tuple[str, int, int]] | None:
+    """``[(file, size, mtime_ns)]`` for the data files of a local parquet
+    path — the file itself, or every file under a directory except
+    ``_``/``.``-prefixed metadata. ``None`` when the path is not locally
+    inspectable (missing, remote filesystem, or an ``OSError``)."""
+    try:
+        if os.path.isdir(path):
+            out = []
+            for root, _dirs, names in os.walk(path):
+                for n in names:
+                    if n.startswith(("_", ".")):
+                        continue
+                    f = os.path.join(root, n)
+                    st = os.stat(f)
+                    out.append((f, st.st_size, st.st_mtime_ns))
+            return out
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return [(path, st.st_size, st.st_mtime_ns)]
+    except OSError:
+        return None
+    return None
+
+
+def _conf_bytes(spark: SparkSession, key: str, default: str) -> int | None:
+    """A byte-size session conf (``"10485760b"``, ``"128m"``, ``"-1"``) in
+    bytes; ``None`` when the value does not parse."""
+    raw = str(spark.conf.get(key, default))
+    m = re.fullmatch(r"(-?\d+)\s*([kKmMgG]?)[bB]?", raw)
+    if not m:
+        return None
+    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[m.group(2).lower()]
+    return int(m.group(1)) * mult
 
 
 def _est_scan_splits(spark: SparkSession, path: str) -> int | None:
@@ -97,31 +178,11 @@ def _est_scan_splits(spark: SparkSession, path: str) -> int | None:
     of Spark's own split math (which also splits to fill parallelism), so
     the caller's spread guard errs toward today's behavior. ``None`` when
     the path is not locally inspectable (remote FS)."""
-    import math  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                total += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith(("_", "."))
-                )
-        else:
-            total = os.path.getsize(path)
-    except OSError:
+    files = _local_data_files(path)
+    split = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "134217728b")
+    if files is None or split is None or split <= 0:
         return None
-    raw = str(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
-    m = re.fullmatch(r"(\d+)\s*([kKmMgG]?)[bB]?", raw)
-    if not m:
-        return None
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[m.group(2).lower()]
-    return max(1, math.ceil(total / (int(m.group(1)) * mult)))
+    return max(1, math.ceil(sum(size for _f, size, _m in files) / split))
 
 
 def table_broadcastable(spark: SparkSession, sf_dir: str, name: str) -> bool:
@@ -136,36 +197,13 @@ def table_broadcastable(spark: SparkSession, sf_dir: str, name: str) -> bool:
     pre-aggregation when it will not — r15; the load_table_spread
     pattern). Falls back to False — the at-scale shape — when the path is
     not locally inspectable or broadcast is disabled (threshold -1)."""
-    import os  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                total += sum(
-                    os.path.getsize(os.path.join(root, f))
-                    for f in files
-                    if not f.startswith(("_", "."))
-                )
-        elif os.path.isfile(path):
-            total = os.path.getsize(path)
-        else:
-            return False  # not locally inspectable -> the at-scale shape
-    except OSError:
-        return False
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+    files = _local_data_files(f"{sf_dir}/{name}.parquet")
+    threshold = _conf_bytes(
+        spark, "spark.sql.autoBroadcastJoinThreshold", "10485760b"
     )
-    m = re.fullmatch(r"(-?\d+)\s*([kKmMgG]?)[bB]?", raw)
-    if not m:
+    if files is None or threshold is None or threshold <= 0:
         return False
-    mult = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30}[m.group(2).lower()]
-    threshold = int(m.group(1)) * mult
-    if threshold <= 0:
-        return False
-    return total * 3 < threshold
+    return sum(size for _f, size, _m in files) * 3 < threshold
 
 
 def load_table_spread(

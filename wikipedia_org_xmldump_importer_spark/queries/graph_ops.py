@@ -18,6 +18,11 @@ from ..io import load_table
 from ..registry import register
 
 _PR_ITERS = 5
+# graph_pagerank_iter drops the per-round localCheckpoint, so its final plan
+# nests every round's broadcast-join subtree into one lineage and Catalyst's
+# analysis/optimization cost grows with that depth. The drop was measured
+# faster at 5 rounds only; past 8, re-checkpoint every few rounds instead.
+assert _PR_ITERS <= 8
 _PR_DAMP = 0.85
 _PR_ITER_DP = 10  # per-iteration rounding: pins float state cross-engine
 # Supplier node ids are NEGATED (and shifted by 1 so suppkey 0 cannot

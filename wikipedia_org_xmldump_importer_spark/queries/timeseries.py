@@ -6008,6 +6008,11 @@ def events_user_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HAAR_N = 32  # zero-padded dyadic length for the ~30-day series
 _HAAR_LEVELS = 5
+# ts_wavelet_haar builds level k from two references to level k-1's array
+# column and relies on CollapseProject not inlining them; if a Spark version
+# does inline, the expression tree grows as 2^_HAAR_LEVELS (32x at 5). Past 5
+# levels, materialize each level with its own select instead.
+assert _HAAR_LEVELS <= 5
 
 
 def _haar_level_sql(k: int) -> str:

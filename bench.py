@@ -69,8 +69,8 @@ from wikipedia_org_xmldump_importer_spark.registry import (  # noqa: E402
 from wikipedia_org_xmldump_importer_spark.session import build_session  # noqa: E402
 
 
-# Printed-line budget: the driver's tail capture is 2000 chars (measured:
-# BENCH_r11.json "tail" is exactly 2000 chars of a truncated JSON line), and
+# Printed-line budget: the driver's tail capture is 2000 chars (measured: a
+# recorded full-registry "tail" is exactly 2000 chars of a truncated line), and
 # stderr WARN lines share that window. r12 judge task 5: keep the printed
 # headline under 1500 chars so the whole line survives even with a few
 # hundred chars of interleaved stderr framing.
@@ -356,7 +356,7 @@ def main() -> None:
 
     # The driver keeps only the LAST ~2000 chars of stdout and JSON-parses
     # that tail. A full-registry run (400+ queries) makes the per-query dict
-    # ~10 KB, so every BENCH_r01..r11.json landed with ``"parsed": null`` —
+    # ~10 KB, so every such run's record landed with ``"parsed": null`` —
     # the headline metric never reached the driver. Fix at the source: the
     # full per-query map always goes to BENCH_FULL.json on disk, and the
     # printed line carries the aggregate metric plus the headline subset

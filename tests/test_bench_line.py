@@ -1,6 +1,6 @@
 """The driver-facing bench stdout line must fit the driver's tail capture.
 
-Every BENCH_r01..r11.json landed with ``"parsed": null`` because the driver
+Full-registry bench runs landed with ``"parsed": null`` because the driver
 keeps only the last 2000 chars of bench.py stdout and the full-registry
 per-query dict is ~10 KB. bench.format_bench_line guarantees the printed
 line fits; these tests lock that contract against registry growth.

@@ -1,8 +1,7 @@
-"""Parallelism-invariance guard (round 9): results must not depend on the
-shuffle layout. The full 396-query proof is the committed
-INVARIANCE_r09.log (tools/check_invariance.py — AQE off + 7 partitions vs
-AQE on + 32, all OK); this test keeps the property continuously enforced
-on a cross-family sample cheap enough for every pytest run, so a new
+"""Parallelism-invariance guard: results must not depend on the shuffle
+layout. The full-registry check is tools/check_invariance.py (AQE off + 7
+partitions vs AQE on + 32); this test keeps the property continuously
+enforced on a cross-family sample cheap enough for every pytest run, so a new
 operator with an unstable tie-break, unsorted collect_list, or
 layout-dependent float order fails CI here before the full sweep would
 catch it.
@@ -47,8 +46,8 @@ ARROW_SAMPLE = ["sim_topk_bruteforce", "ts_matrix_profile", "mm_image_dims"]
 @pytest.mark.parametrize("name", ARROW_SAMPLE)
 def test_result_invariant_to_arrow_batch_size(spark, name):
     """The batch-local-work-composes-exactly argument every pandas kernel
-    makes, checked at an adversarial 7 rows/batch (full 25-query sweep:
-    INVARIANCE_ARROW_r09.log)."""
+    makes, checked at an adversarial 7 rows/batch (full sweep:
+    ``tools/check_invariance.py --arrow``)."""
     from check_oracle import to_rows
 
     _ensure_loaded()

@@ -105,7 +105,7 @@ def main() -> int:
         names = args.names or pandas_kernel_queries()
         # rows-only pandas queries are checked too: their sampling/
         # bucketing is hash-derived, never batch-derived, so even the ANN
-        # paths must be (and are — INVARIANCE_ARROW_r09.log) batch-size
+        # paths must be (and are) batch-size
         # invariant
         skip_names: set[str] = set()
     else:

@@ -94,7 +94,7 @@ def compare(name: str, spark_pdf, duck_pdf) -> list[str]:
     # driver-attested-green queries carry them (datetime64[ns] vs [us] on
     # join_asof/stream_*/ts_*/agg_global/win_first_last/fn_date/fn_cast,
     # int32 vs int64 on doc_chunk_overlap.char_start — every one
-    # hash-matched in CORRECTNESS_r01-r04), so the driver canonicalizes
+    # hash-matched by the driver), so the driver canonicalizes
     # width away and an exact-dtype gate here would raise false FAILs.
     for c in s_cols:
         sk = spark_pdf[c].dtype.kind

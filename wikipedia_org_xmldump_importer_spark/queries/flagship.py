@@ -1034,7 +1034,7 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same parenthesization, round it to cents ONCE at row grain, and
     # sum exact int64 — a raw round(SUM(double), 2) diverged by one cent
     # at sf0.001 when cross-engine summation order straddled a boundary
-    # (caught by the r9 sf0.001 cross-check, CHECK_ORACLE_r09_sf0001.log).
+    # (caught by the sf0.001 oracle cross-check).
     amount_cents = F.round(
         (
             F.col("l_extendedprice") * (1 - F.col("l_discount"))

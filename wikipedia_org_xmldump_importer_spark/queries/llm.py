@@ -287,7 +287,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     large probe sets chunk the broadcast probe matrix and union. Replaces a
     BroadcastNestedLoopJoin + interpreted-HOF cosine fold, the last
     non-vectorized similarity kernel in the repo (~10-100× slower per
-    NOTES.md trap #5 — it was the slowest query in BENCH_r02). This
+    NOTES.md trap #5 — it was the slowest query in an early bench). This
     brute-force kernel is also the recall oracle for the ANN variants
     (sim_ann_lsh, sim_ann_ivf, dedup_near_minhash)."""
     emb = load_table(spark, sf_dir, "embeddings")

@@ -1489,7 +1489,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame — it feeds FIVE consumers (3 bloom-position unions, the
     # position-distinct, the exact-hit join), each of which had been
     # re-deriving the full gram-explode + md5 + distinct subtree (52
-    # Exchanges in the before-plan; plans/r14). Eval sets are small by
+    # Exchanges in the before-plan). Eval sets are small by
     # definition, so the materialization is cheap at any scale. Measured
     # (interleaved 3-shot medians, sf0.1): 2.4-2.5 s -> 1.9-2.0 s.
     ev = gh.filter(is_ev).select("gram", "h").distinct().localCheckpoint(eager=True)

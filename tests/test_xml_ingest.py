@@ -135,11 +135,11 @@ def test_import_dump_meta_only_skips_text(spark, tmp_path):
 def test_synthetic_dump_generator_roundtrip(spark, tmp_path):
     """The bench generator's dump must parse under the pinned PAGE_SCHEMA
     with every page accounted for (the bench's own precondition)."""
-    from tools.bench_xml import generate_dump
+    from perfbench.dumpgen import generate
 
-    gen = generate_dump(str(tmp_path / "synth"), total_mb=1.0, n_files=2)
+    gen = generate(str(tmp_path / "synth"), total_mb=1.0, n_files=2, seed=7)
     pages = scan_xml_pages(spark, str(tmp_path / "synth"))
-    assert pages.count() == gen["pages"]
+    assert pages.count() == gen.pages
     assert pages.filter("id IS NULL OR title IS NULL").count() == 0
     rev_rows = flatten_revisions(pages)
     assert rev_rows.filter("rev_timestamp IS NULL").count() == 0

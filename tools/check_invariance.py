@@ -41,7 +41,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from check_oracle import to_rows  # noqa: E402  (same dir)
 

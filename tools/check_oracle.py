@@ -22,7 +22,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikipedia_org_xmldump_importer_spark.io import TABLES  # noqa: E402
 from wikipedia_org_xmldump_importer_spark.registry import (  # noqa: E402

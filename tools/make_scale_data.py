@@ -34,6 +34,7 @@ Usage: python tools/make_scale_data.py [replicas] [out_dir]
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -77,10 +78,17 @@ def _replicate(df: DataFrame, replicas: int, shifts: dict, extra=None) -> DataFr
 
 
 def main() -> None:
-    replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "benchdata", "sf1"
+    ap = argparse.ArgumentParser(description="Write a key-shifted replica scale-up of sf0.1.")
+    ap.add_argument("replicas", nargs="?", type=int, default=10)
+    ap.add_argument(
+        "out_dir",
+        nargs="?",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "benchdata", "sf1"
+        ),
     )
+    args = ap.parse_args()
+    replicas, out_dir = args.replicas, args.out_dir
     spark = build_session(app_name="make_scale_data")
 
     def write(df: DataFrame, name: str) -> None:

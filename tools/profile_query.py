@@ -33,7 +33,7 @@ import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikipedia_org_xmldump_importer_spark.cbo import (  # noqa: E402
     register_tables_with_stats,

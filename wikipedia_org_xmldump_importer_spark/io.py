@@ -316,8 +316,8 @@ def scan_jdbc(
     to what the database tolerates, not to the cluster's cores (hundreds
     of parallel scans can brown-out an OLTP source); ``fetchsize``
     amortizes per-row round trips on the read path exactly as
-    ``batchsize`` does on the write path (Derby-measured in
-    tools/bench_jdbc.py; the classic 10k default). A monotonically-
+    ``batchsize`` does on the write path (measured against Derby; the
+    classic 10k default). A monotonically-
     loaded warehouse key (orderdate, ingest batch id) makes the stride
     form partition-pruned on the database side too, because each stride
     query hits one index range. Stride skew (a hot key range) is the
@@ -529,8 +529,8 @@ def compact_parquet(
 
     ``openCostInBytes`` is pinned LOW (128 KB) for the scan: the default
     4 MB charges each tiny file 4 MB of virtual size, so a 512-file 19 MB
-    directory planned as ~530 MB and split into 5 outputs (measured,
-    BENCH_IO.json probe) — exactly wrong for the many-tiny-files input
+    directory planned as ~530 MB and split into 5 outputs (measured) —
+    exactly wrong for the many-tiny-files input
     this op exists to fix. 128 KB still bounds the files-per-split fan
     (~1000 opens per 128 MB split) without dominating real bytes. ``minPartitionNum`` is
     pinned to 1 because Spark's split size is

@@ -707,7 +707,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (r14: a broadcast-labels hint was A/B'd here and LOST — this edge
     # list is the small co-supply graph, so per-round broadcast builds cost
-    # more than the tiny SortMergeJoin they replace; see OPTIMIZATION_r14.md.)
+    # more than the tiny SortMergeJoin they replace; NOTES.md "r14/r15".)
     for _ in range(_LP_ROUNDS):
         pushed = (
             edges.join(labels, edges.src == labels.node)
@@ -1015,7 +1015,7 @@ def graph_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop. Measured (interleaved 3-shot medians, sf0.1): 3.35 s -> 2.81 s,
     identical rows. (The x313 frontier rewrite was also measured here and
     LOST — dist is already only |V| rows, so the smaller join input does
-    not pay for the extra frontier-filter jobs; see OPTIMIZATION_r14.md.)"""
+    not pay for the extra frontier-filter jobs; NOTES.md "r14/r15".)"""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     eb = (

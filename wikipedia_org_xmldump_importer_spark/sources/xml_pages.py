@@ -18,17 +18,19 @@ lands in DataFrames → Parquet (or the JDBC sink, io.sink_jdbc).
     partition per core, so a 100 TB dump parallelizes by SHARD COUNT —
     which is how real dumps ship (enwiki pages-articles-multistream is
     ~700+ bz2 chunks plus an index). Feed the chunk set; for a mono-file
-    dump run sources/dump_split.shard_dump (s14) first —
-    tools/bench_xml.py measures the multi-file path scaling to all
-    cores at ~10 MB/s/core.
+    dump run sources/dump_split.shard_dump (s14) first.
+    tests/test_dump_split.py asserts that shards scan as >1 partition
+    while the mono-file stays at 1; perfbench's import_full workload
+    imports an 8-shard dump and reports the import in MB/s.
   * The explicit PAGE_SCHEMA matters twice: schema inference on XML is a
     full extra pass over 100 TB, and the read schema is the ONLY nested
     pruning the XML source gets — Catalyst's nestedSchemaPruning rule
     applies to Parquet/ORC alone, so a metadata-only scan must pass
     ``include_text=False`` to keep the giant ``revision.text`` payload
     (the dominant byte share of a real dump) out of the parsed rows.
-    Top-level column pruning DOES reach the XML scan (asserted in tests);
-    the bench (tools/bench_xml.py) asserts the nested case at size.
+    Top-level column pruning DOES reach the XML scan, and the nested
+    case holds for both the plain and the multistream scan (both
+    asserted in tests/test_xml_ingest.py and test_dump_multistream.py).
   * Multi-revision pages arrive as ARRAY<STRUCT> → posexplode preserves
     in-page revision order without a window.
 """

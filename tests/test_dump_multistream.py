@@ -254,11 +254,10 @@ def test_split_pages_unit():
 
 
 def test_import_dump_full_from_multistream(spark, tmp_path):
-    """The flagship entry points accept the real dump format directly:
-    import_dump / import_dump_full with multistream_index produce tables
+    """The flagship entry point accepts the real dump format directly:
+    import_dump_full with multistream_index produces all seven tables
     row-identical to the mono-file import of the same corpus."""
     from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
-        import_dump,
         import_dump_full,
     )
 
@@ -267,26 +266,13 @@ def test_import_dump_full_from_multistream(spark, tmp_path):
     index = str(tmp_path / "idx.txt.bz2")
     write_multistream(src, dump, index, pages_per_stream=2)
 
-    mono = import_dump(
-        spark, src, str(tmp_path / "out_mono"), namespace=None
-    )
-    ms = import_dump(
-        spark,
-        dump,
-        str(tmp_path / "out_ms"),
-        namespace=None,
-        multistream_index=index,
-    )
-    for name in mono:
-        a = {tuple(r) for r in mono[name].collect()}
-        b = {tuple(r) for r in ms[name].collect()}
-        assert a == b, f"table {name} differs between mono and multistream"
-
     full_mono = import_dump_full(spark, src, str(tmp_path / "f_mono"))
     full_ms = import_dump_full(
         spark, dump, str(tmp_path / "f_ms"), multistream_index=index
     )
-    for name in ("pagelinks", "redirect", "pagelinks_resolved"):
+    assert set(full_mono) == set(full_ms)
+    assert len(full_mono) == 7
+    for name in full_mono:
         a = {tuple(r) for r in full_mono[name].collect()}
         b = {tuple(r) for r in full_ms[name].collect()}
         assert a == b, f"full-pipeline table {name} differs"

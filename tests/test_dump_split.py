@@ -140,8 +140,7 @@ def test_cli_shard_mb_flag(spark, mono_dump):
     src, gen, work = mono_dump
     out = os.path.join(work, "cli_out")
     rc = cli_main(
-        ["--xml", src, "--out", out, "--namespace", "-1",
-         "--keep-redirects", "--shard-mb", "1"]
+        ["--xml", src, "--out", out, "--namespace", "-1", "--shard-mb", "1"]
     )
     assert rc == 0
     assert len(os.listdir(os.path.join(out, "_shards"))) > 4

@@ -1,4 +1,4 @@
-"""The import entry points' sink phase: tables written as concurrent Spark
+"""The batch import's sink phase: tables written as concurrent Spark
 jobs must keep the caller's job group, surface any sink's failure, and
 leave no cached data behind once the call returns."""
 
@@ -7,10 +7,7 @@ from __future__ import annotations
 import pytest
 from conftest import FIXTURES
 
-from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
-    import_dump,
-    import_dump_full,
-)
+from wikipedia_org_xmldump_importer_spark.sources.xml_pages import import_dump_full
 
 DUMP = str(FIXTURES / "wikilinks.xml")
 
@@ -30,14 +27,10 @@ def _all_job_ids(spark) -> set[int]:
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
-@pytest.mark.parametrize("entry", ["import_dump", "import_dump_full"])
-def test_import_releases_page_cache(spark, tmp_path, entry):
+def test_import_releases_page_cache(spark, tmp_path):
     spark.catalog.clearCache()
     before = _cached_rdd_ids(spark)
-    if entry == "import_dump":
-        out = import_dump(spark, DUMP, str(tmp_path / "lake"), namespace=None)
-    else:
-        out = import_dump_full(spark, DUMP, str(tmp_path / "lake"))
+    out = import_dump_full(spark, DUMP, str(tmp_path / "lake"))
     assert _cached_rdd_ids(spark) - before == set()
     # the returned frames read the lake, so they still answer
     assert out["page"].count() == 6

@@ -2,13 +2,26 @@
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 import pandas as pd
+from conftest import FIXTURES
 
 from wikipedia_org_xmldump_importer_spark.__main__ import main as cli_main
 from wikipedia_org_xmldump_importer_spark.io import sink_parquet
 from wikipedia_org_xmldump_importer_spark.sources.csv_json import scan_csv, scan_jsonl
 
-FIXTURE_XML = "tests/fixtures/multi_revision.xml"
+FIXTURE_XML = str(FIXTURES / "multi_revision.xml")
+TABLES = {
+    "page",
+    "revision",
+    "contributor",
+    "text",
+    "pagelinks",
+    "redirect",
+    "pagelinks_resolved",
+}
 
 
 def test_scan_csv_explicit_schema_and_corrupt_quarantine(spark, tmp_path):
@@ -48,8 +61,10 @@ def test_sink_parquet_partitioned(spark, tmp_path):
 
 def test_cli_import_end_to_end(spark, tmp_path):
     out = str(tmp_path / "cli_out")
-    rc = cli_main(["--xml", FIXTURE_XML, "--out", out, "--keep-redirects"])
+    rc = cli_main(["--xml", FIXTURE_XML, "--out", out])
     assert rc == 0
+    # the CLI writes exactly import_dump_full's seven tables
+    assert set(os.listdir(out)) == {f"{name}.parquet" for name in TABLES}
     page = spark.read.parquet(f"{out}/page.parquet")
     rev = spark.read.parquet(f"{out}/revision.parquet")
     assert page.count() == 1
@@ -57,3 +72,29 @@ def test_cli_import_end_to_end(spark, tmp_path):
     # revision order preserved from the dump via rev_seq
     seqs = [r.rev_seq for r in rev.orderBy("rev_seq").collect()]
     assert seqs == [0, 1, 2]
+
+
+def test_cli_jdbc_load(spark, tmp_path):
+    """--jdbc-url loads import_dump_full's database set: wiki_page,
+    wiki_redirect and wiki_pagelinks_resolved, each equal to its Parquet
+    table."""
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    url = "jdbc:derby:memory:cli_jdbc_load;create=true"
+    out = str(tmp_path / "cli_jdbc")
+    xml = str(FIXTURES / "wikilinks.xml")
+    rc = cli_main(["--xml", xml, "--out", out, "--jdbc-url", url])
+    assert rc == 0
+    want_counts = {"page": 6, "redirect": 4, "pagelinks_resolved": 8}
+    for name, n in want_counts.items():
+        back = (
+            spark.read.format("jdbc")
+            .option("url", url)
+            .option("dbtable", f"wiki_{name}")
+            .option("driver", driver)
+            .load()
+        )
+        lake = spark.read.parquet(f"{out}/{name}.parquet")
+        assert back.count() == n, name
+        assert Counter(map(tuple, back.collect())) == Counter(
+            map(tuple, lake.collect())
+        ), name

@@ -11,7 +11,7 @@ from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
     flatten_pages,
     flatten_revisions,
     flatten_text,
-    import_dump,
+    import_dump_full,
     scan_xml_pages,
 )
 
@@ -86,13 +86,21 @@ def test_empty_optionals_and_deleted_text(spark):
 
 
 def test_import_dump_end_to_end(spark, tmp_path):
-    out = import_dump(
+    out = import_dump_full(
         spark,
         str(FIXTURES / "multi_revision.xml"),
         str(tmp_path / "imported"),
         namespace=0,
     )
-    assert set(out) == {"page", "revision", "contributor", "text"}
+    assert set(out) == {
+        "page",
+        "revision",
+        "contributor",
+        "text",
+        "pagelinks",
+        "redirect",
+        "pagelinks_resolved",
+    }
     reread = spark.read.parquet(str(tmp_path / "imported" / "revision.parquet"))
     assert reread.count() == 3
 
@@ -117,19 +125,6 @@ def test_meta_schema_prunes_text_payload(spark):
     assert sorted(map(tuple, flatten_pages(meta).collect())) == sorted(
         map(tuple, flatten_pages(full).collect())
     )
-
-
-def test_import_dump_meta_only_skips_text(spark, tmp_path):
-    out = import_dump(
-        spark,
-        str(FIXTURES / "multi_revision.xml"),
-        str(tmp_path / "meta_imported"),
-        namespace=0,
-        tables=("page", "revision", "contributor"),
-    )
-    assert set(out) == {"page", "revision", "contributor"}
-    reread = spark.read.parquet(str(tmp_path / "meta_imported" / "revision.parquet"))
-    assert reread.count() == 3
 
 
 def test_synthetic_dump_generator_roundtrip(spark, tmp_path):
@@ -366,7 +361,6 @@ def test_import_dump_full_end_to_end(spark, tmp_path):
 
     from wikipedia_org_xmldump_importer_spark.sources.xml_pages import (
         extract_wikilinks,
-        import_dump_full,
         resolve_redirect_chains,
     )
 
@@ -487,9 +481,7 @@ def test_stream_import_dump_incremental_matches_batch(spark, tmp_path):
     land.mkdir()
 
     def drain():
-        q = stream_import_dump(
-            spark, str(land), str(lake), include_links=True
-        )
+        q = stream_import_dump(spark, str(land), str(lake))
         q.awaitTermination(120)
 
     # arrival 1

@@ -3,15 +3,16 @@
 
     python -m wikipedia_org_xmldump_importer_spark \
         --xml dump.xml[.bz2] --out /data/wiki \
-        [--namespace 0] [--keep-redirects] [--shard-mb 256] \
-        [--jdbc-url jdbc:postgresql://... --jdbc-table-prefix wiki_]
+        [--namespace 0] [--shard-mb 256] [--jdbc-url jdbc:postgresql://...]
 
-Writes the four destination tables (page / revision / contributor / text)
-as Parquet under --out; with --jdbc-url, additionally loads each table via
-the JDBC sink (the reference's DB-load step). ``--shard-mb`` pre-splits a
-MONO-FILE dump at <page> boundaries first (sources/dump_split.py, s14) —
-Spark's XML source never splits within a file, so without it a
-single-file dump parses on one core.
+Runs ``sources.xml_pages.import_dump_full``: writes its seven tables (page /
+revision / contributor / text / pagelinks / redirect / pagelinks_resolved)
+as Parquet under --out; with --jdbc-url, additionally loads wiki_page /
+wiki_redirect / wiki_pagelinks_resolved through the JDBC sink (the
+reference's DB-load step). ``--shard-mb`` pre-splits a MONO-FILE dump at
+<page> boundaries first (sources/dump_split.py, s14) — Spark's XML source
+never splits within a file, so without it a single-file dump parses on one
+core.
 """
 
 from __future__ import annotations
@@ -25,9 +26,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--xml", required=True, help="MediaWiki dump path (.xml/.xml.bz2/.xml.gz)")
     p.add_argument("--out", required=True, help="output directory for Parquet tables")
     p.add_argument("--namespace", type=int, default=0, help="keep only this ns (-1 = all)")
-    p.add_argument("--keep-redirects", action="store_true")
     p.add_argument("--jdbc-url", default=None, help="optional JDBC DSN for the DB-load step")
-    p.add_argument("--jdbc-table-prefix", default="")
     p.add_argument("--master", default=None, help="Spark master (default local[$SPARK_GRAFT_CPUS])")
     p.add_argument(
         "--shard-mb",
@@ -38,9 +37,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = p.parse_args(argv)
 
-    from .io import sink_jdbc
     from .session import build_session
-    from .sources.xml_pages import import_dump
+    from .sources.xml_pages import import_dump_full
 
     xml_path = args.xml
     if args.shard_mb:
@@ -58,18 +56,16 @@ def main(argv: list[str] | None = None) -> int:
         xml_path = shard_dir
 
     spark = build_session(app_name="xmldump-import", master=args.master)
-    tables = import_dump(
+    tables = import_dump_full(
         spark,
         xml_path,
         args.out,
+        jdbc_url=args.jdbc_url,
         namespace=None if args.namespace == -1 else args.namespace,
-        drop_redirects=not args.keep_redirects,
     )
     for name, df in tables.items():
         n = df.count()
         print(f"{name}: {n} rows -> {args.out}/{name}.parquet", file=sys.stderr)
-        if args.jdbc_url:
-            sink_jdbc(df, args.jdbc_url, f"{args.jdbc_table_prefix}{name}")
     return 0
 
 

@@ -8,6 +8,10 @@ reference streams this once and batch-inserts into the canonical MediaWiki
 SQL tables (page / revision / text / contributor). Here the same flatten
 lands in DataFrames → Parquet (or the JDBC sink, io.sink_jdbc).
 
+Two import entry points: ``import_dump_full``, the one batch import (the
+CLI in ``__main__`` runs it), and ``stream_import_dump``, its incremental
+twin over a landing directory.
+
 100 TB notes:
   * The FILE is the scan's minimum split grain. Measured on this box
     (r10, NOTES.md "Round 10 probes"): Spark's XML source NEVER splits
@@ -331,24 +335,6 @@ _FLATTENS = {
 }
 
 
-def _scan_pages_any(
-    spark: SparkSession,
-    dump_path: str,
-    include_text: bool,
-    multistream_index: str | None,
-) -> DataFrame:
-    """Dispatch the page source: s20 multistream scan when an index is
-    given (the format real dumps ship in — parallelism == chunk count),
-    else the s2 file scan (plain/.bz2 files or shard directories)."""
-    if multistream_index is not None:
-        from .dump_multistream import scan_multistream  # noqa: PLC0415
-
-        return scan_multistream(
-            spark, dump_path, multistream_index, include_text=include_text
-        )
-    return scan_xml_pages(spark, dump_path, include_text=include_text)
-
-
 def _run_concurrently(spark: SparkSession, jobs: list[Callable[[], None]]) -> None:
     """Run each job on its own thread, so their Spark jobs run at once, and
     re-raise the first error once every job has finished. Each thread
@@ -384,44 +370,6 @@ def _write_tables(
         name: spark.read.schema(df.schema).parquet(paths[name])
         for name, df in frames.items()
     }
-
-
-def import_dump(
-    spark: SparkSession,
-    dump_path: str,
-    out_dir: str,
-    namespace: int | None = 0,
-    drop_redirects: bool = False,
-    tables: tuple[str, ...] = ("page", "revision", "contributor", "text"),
-    multistream_index: str | None = None,
-) -> dict[str, DataFrame]:
-    """The reference's whole pipeline as one call: dump → four Parquet
-    tables (BASELINE.json: 'Spark XML reader + DataFrame write to JDBC' —
-    load the returned frames with io.sink_jdbc when a DB DSN is
-    configured, as ``__main__`` does). ``multistream_index`` switches the
-    page source to the s20 multistream reader, so the format real dumps
-    ship in feeds this pipeline directly (tested row-identical to the mono
-    path). The returned frames read the written Parquet.
-
-    100 TB notes: one XML scan, cached after the namespace filter, feeds
-    all requested flattens (XML parse dominates cost and never runs
-    twice); the flattens are written as concurrent Spark jobs, and the
-    cache is released before return. A metadata-only import (``tables``
-    without "text") scans with the pruned schema so the article payload
-    is never parsed into rows.
-    """
-    pages = _scan_pages_any(
-        spark, dump_path, "text" in tables, multistream_index
-    )
-    if namespace is not None:
-        pages = filter_namespace(pages, namespace, drop_redirects)
-    pages = pages.cache()
-    try:
-        return _write_tables(
-            spark, {name: _FLATTENS[name](pages) for name in tables}, out_dir
-        )
-    finally:
-        pages.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -618,11 +566,14 @@ def import_dump_full(
     namespace: int | None = None,
     multistream_index: str | None = None,
 ) -> dict[str, DataFrame]:
-    """The reference's ACTUAL job as one entry point (r8 verdict task 6):
+    """The reference's actual job, and the one batch import: the CLI
+    (``python -m wikipedia_org_xmldump_importer_spark``) runs it.
     MediaWiki export dump -> page / revision / contributor / text tables
     -> wikilink graph -> redirect resolution -> RESOLVED link graph ->
     Parquet sinks (+ the JDBC load when ``jdbc_url`` is given — Derby in
-    tests, any production DB via the same DSN string).
+    tests, any production DB via the same DSN string). ``multistream_index``
+    switches the page source to the s20 multistream reader, the format
+    real dumps ship in (tested table-identical to the mono-file import).
 
     Tables produced (all also returned, keyed by name):
 
@@ -658,7 +609,12 @@ def import_dump_full(
     """
     from ..io import sink_jdbc  # noqa: PLC0415
 
-    pages = _scan_pages_any(spark, dump_path, True, multistream_index)
+    if multistream_index is not None:
+        from .dump_multistream import scan_multistream  # noqa: PLC0415
+
+        pages = scan_multistream(spark, dump_path, multistream_index)
+    else:
+        pages = scan_xml_pages(spark, dump_path)
     if namespace is not None:
         pages = filter_namespace(pages, namespace, drop_redirects=False)
     pages = pages.cache()
@@ -720,8 +676,6 @@ def stream_import_dump(
     spark: SparkSession,
     watch_dir: str,
     out_dir: str,
-    tables: tuple[str, ...] = ("page", "revision", "contributor", "text"),
-    include_links: bool = True,
     checkpoint: str | None = None,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
@@ -772,18 +726,15 @@ def stream_import_dump(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            for name in tables:
+            for name, flatten in _FLATTENS.items():
                 sink_parquet(
-                    _FLATTENS[name](batch_df),
-                    f"{out_dir}/{name}.parquet",
-                    mode="append",
+                    flatten(batch_df), f"{out_dir}/{name}.parquet", mode="append"
                 )
-            if include_links:
-                sink_parquet(
-                    extract_wikilinks(batch_df),
-                    f"{out_dir}/pagelinks.parquet",
-                    mode="append",
-                )
+            sink_parquet(
+                extract_wikilinks(batch_df),
+                f"{out_dir}/pagelinks.parquet",
+                mode="append",
+            )
         finally:
             batch_df.unpersist()
 

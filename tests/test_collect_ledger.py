@@ -25,15 +25,12 @@ LEDGER: dict[tuple[str, str], tuple[int, str]] = {
     ("functions/bloom.py", "build_bitmap"): (
         1, "distinct bloom bit positions — <= m rows (the filter's own "
            "size, 2^18), never corpus-bound"),
-    ("operators/ann_chunked.py", "sim_topk_chunked"): (
-        1, "probe IDS only (8 bytes each), collected once to derive "
-           "deterministic chunk boundaries; vectors never leave executors"),
     ("plans/inspect.py", "executed_plan"): (
         1, "test/debug helper behind materialize=True — callers pass "
            "small/test data only, never a production hot path"),
     ("queries/llm.py", "_collect_probe_matrix"): (
-        1, "probe matrix bounded by the probe predicate contract "
-           "(vec_id < 20 at test scale; chunked driver bounds it at size)"),
+        1, "probe matrix bounded by the probe predicate contract: both "
+           "callers (l3, l8) pass vec_id < 20, so at most 20 rows"),
     ("queries/llm.py", "sim_ann_ivf"): (
         1, "k-means training sample hash-modulus bounded to "
            "_IVF_TRAIN_TARGET rows regardless of corpus size"),

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import math
 
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
 from wikipedia_org_xmldump_importer_spark.queries.quality_ops import dq_benford
@@ -17,7 +17,6 @@ from wikipedia_org_xmldump_importer_spark.queries.timeseries import (
 )
 
 _GAP_US = 1_800_000_000
-_DAY_US = 86_400_000_000
 
 
 def test_benford_matches_python_replay(spark):
@@ -76,9 +75,9 @@ def test_peak_concurrency_matches_bruteforce(spark):
     ]
     segs: dict[int, list[tuple[int, int]]] = {}
     for s, e in _sessions(ev):
-        for day in range(s // _DAY_US, e // _DAY_US + 1):
-            lo = max(s, day * _DAY_US)
-            hi = min(e, (day + 1) * _DAY_US - 1)
+        for day in range(s // DAY_US, e // DAY_US + 1):
+            lo = max(s, day * DAY_US)
+            hi = min(e, (day + 1) * DAY_US - 1)
             segs.setdefault(day, []).append((lo, hi))
     expect = {}
     for day, ivs in segs.items():
@@ -141,7 +140,7 @@ def test_holt_matches_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").select("ts_us").collect()
     daily: dict[int, int] = {}
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         daily[d] = daily.get(d, 0) + 1
     ys = [float(daily[d]) for d in sorted(daily)]
     a, b = 0.3, 0.1
@@ -590,7 +589,7 @@ def test_haar_reconstruction(spark):
     ev = load_table(spark, SF_SMOKE, "events").select("ts_us").collect()
     daily: dict[int, int] = {}
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         daily[d] = daily.get(d, 0) + 1
     d0 = min(daily)
     series = [float(daily.get(d0 + i, 0)) for i in range(32)]
@@ -748,7 +747,7 @@ def test_binseg_matches_bruteforce(spark):
     ev = load_table(spark, SF_SMOKE, "events").select("ts_us").collect()
     daily: dict[int, int] = {}
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         daily[d] = daily.get(d, 0) + 1
     days = sorted(daily)
     ys = [daily[d] for d in days]
@@ -1031,7 +1030,7 @@ def test_causal_impact_replay(spark):
     ).collect()
     daily: dict = {}
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         t = int(hashlib.md5(f"ci:{r.user_id}".encode()).hexdigest()[:3], 16) % 2
         y, x, dom = daily.get(d, (0, 0, r.dom))
         daily[d] = (y + (r.cents if t else 0), x + (0 if t else r.cents), r.dom)
@@ -1099,7 +1098,7 @@ def test_holt_winters_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").select("ts_us").collect()
     daily: dict[int, int] = {}
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         daily[d] = daily.get(d, 0) + 1
     ys = [float(daily[d]) for d in sorted(daily)]
     a, b, g, m = 0.3, 0.1, 0.2, 7

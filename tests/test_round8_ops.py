@@ -13,20 +13,9 @@ import math
 import zlib
 from collections import defaultdict
 
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, daily_counts
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _daily_counts(spark, types=None):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        if types is None or r.event_type in types:
-            daily[r.event_type][r.ts_us // _DAY_US] += 1
-    return daily
 
 
 def test_ks_twosample_python_replay(spark):
@@ -70,7 +59,7 @@ def test_mann_kendall_python_replay(spark):
         agg_mann_kendall,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in agg_mann_kendall(spark, SF_SMOKE).collect()}
     for et, series in daily.items():
         days = sorted(series)
@@ -198,7 +187,7 @@ def test_theta_forecast_python_replay(spark):
 
     daily = defaultdict(int)
     for r in load_table(spark, SF_SMOKE, "events").collect():
-        daily[r.ts_us // _DAY_US] += 1
+        daily[r.ts_us // DAY_US] += 1
     ys = [float(daily[d]) for d in sorted(daily)]
     lvl = ys[0]
     for y in ys[1:]:
@@ -222,7 +211,7 @@ def test_hurst_rs_python_replay(spark):
         ts_hurst_rs,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = ts_hurst_rs(spark, SF_SMOKE).collect()
     by_type = defaultdict(dict)
     for r in rows:
@@ -261,7 +250,7 @@ def test_sax_symbols_tercile_invariants(spark):
     by_type = defaultdict(list)
     for r in rows:
         by_type[r.event_type].append(r)
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     for et, rs in by_type.items():
         m = len(rs)
         n_a = sum(1 for r in rs if r.symbol == "a")
@@ -439,7 +428,7 @@ def test_ks_drift_daily_consistency(spark):
         events_ks_drift_daily,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = events_ks_drift_daily(spark, SF_SMOKE).collect()
     seen = {(r.event_type, r.day) for r in rows}
     for et, series in daily.items():
@@ -465,7 +454,7 @@ def test_kendall_tau_python_replay(spark):
         corr_kendall_tau,
     )
 
-    daily = _daily_counts(spark, types={"view", "purchase"})
+    daily = daily_counts(spark, types={"view", "purchase"})
     days = sorted(set(daily["view"]) & set(daily["purchase"]))
     pts = [(daily["view"][d], daily["purchase"][d]) for d in days]
     c = d = tx = ty = txy = 0
@@ -608,7 +597,7 @@ def test_dispersion_panel_replay(spark):
         events_dispersion_panel,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in events_dispersion_panel(spark, SF_SMOKE).collect()}
     for et, series in daily.items():
         ys = list(series.values())
@@ -634,7 +623,7 @@ def test_lttb_structure_and_area_argmax(spark):
         ts_downsample_lttb,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = ts_downsample_lttb(spark, SF_SMOKE).collect()
     by_type = defaultdict(dict)
     for r in rows:

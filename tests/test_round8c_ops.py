@@ -17,19 +17,9 @@ import math
 from collections import defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, daily_counts, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _daily_counts(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        daily[r.event_type][r.ts_us // _DAY_US] += 1
-    return daily
 
 
 def _cents_by_type(spark):
@@ -84,7 +74,7 @@ def test_cramers_v_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     cell: dict[tuple, int] = defaultdict(int)
     for r in ev:
-        cell[(r.event_type, (r.ts_us // _DAY_US + 4) % 7)] += 1
+        cell[(r.event_type, (r.ts_us // DAY_US + 4) % 7)] += 1
     n = sum(cell.values())
     rmarg: dict[str, int] = defaultdict(int)
     cmarg: dict[int, int] = defaultdict(int)
@@ -136,7 +126,7 @@ def test_ljung_box_python_replay(spark):
         ts_ljung_box,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     out = defaultdict(dict)
     for r in ts_ljung_box(spark, SF_SMOKE).collect():
         out[r.event_type][r.lag] = r
@@ -167,7 +157,7 @@ def test_runs_test_python_replay(spark):
         ts_runs_test,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_runs_test(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():
@@ -190,12 +180,6 @@ def test_runs_test_python_replay(spark):
         assert r.z_score == pytest.approx((runs - e_r) / math.sqrt(var_r), abs=1e-5)
 
 
-def _half_away(x: float) -> int:
-    """ROUND-to-integer as both engines do it (half away from zero);
-    inputs here are nonnegative so floor(x + 0.5) is exact (trap #30)."""
-    return int(math.floor(x + 0.5))
-
-
 def test_croston_python_replay(spark):
     """Replay Croston per part with the SAME IEEE fold the engines run
     (z' = 0.2q + 0.8z literal coefficients) — the replay proves top-k
@@ -212,7 +196,7 @@ def test_croston_python_replay(spark):
     demand: dict[int, dict[int, int]] = defaultdict(lambda: defaultdict(int))
     for r in li:
         day = (r.l_shipdate - epoch) // timedelta(days=1)
-        demand[r.l_partkey][day] += _half_away(r.l_quantity)
+        demand[r.l_partkey][day] += half_away(r.l_quantity)
     d0 = min(d for dd in demand.values() for d in dd)
     top = sorted(demand, key=lambda pk: (-len(demand[pk]), pk))[:25]
     top = [pk for pk in top if len(demand[pk]) >= 3]
@@ -243,7 +227,7 @@ def test_bollinger_python_replay(spark):
         ts_bollinger,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     out = defaultdict(dict)
     for r in ts_bollinger(spark, SF_SMOKE).collect():
         out[r.event_type][r.day] = r
@@ -275,7 +259,7 @@ def test_backtest_tournament_python_replay(spark):
         ts_backtest_tournament,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     out = defaultdict(dict)
     for r in ts_backtest_tournament(spark, SF_SMOKE).collect():
         out[r.event_type][r.model] = r
@@ -317,7 +301,7 @@ def test_ipf_raking_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     cell: dict[tuple, int] = defaultdict(int)
     for r in ev:
-        cell[(r.event_type, (r.ts_us // _DAY_US + 4) % 7)] += 1
+        cell[(r.event_type, (r.ts_us // DAY_US + 4) % 7)] += 1
     n = sum(cell.values())
     w = {k: o * 1_000_000 for k, o in cell.items()}
     for _ in range(3):
@@ -325,14 +309,14 @@ def test_ipf_raking_python_replay(spark):
         for (et, wd), wu in w.items():
             rsum[et] += wu
         w = {
-            (et, wd): _half_away(wu * ((float(n) * 200000) / rsum[et]))
+            (et, wd): half_away(wu * ((float(n) * 200000) / rsum[et]))
             for (et, wd), wu in w.items()
         }
         csum: dict[int, int] = defaultdict(int)
         for (et, wd), wu in w.items():
             csum[wd] += wu
         w = {
-            (et, wd): _half_away(wu * ((float(n) * 1000000 / 7) / csum[wd]))
+            (et, wd): half_away(wu * ((float(n) * 1000000 / 7) / csum[wd]))
             for (et, wd), wu in w.items()
         }
     rows = {(r.event_type, r.wd): r for r in agg_ipf_raking(spark, SF_SMOKE).collect()}
@@ -364,7 +348,7 @@ def test_pettitt_bruteforce_replay(spark):
         ts_pettitt,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_pettitt(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():

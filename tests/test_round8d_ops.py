@@ -18,30 +18,16 @@ from collections import defaultdict
 from datetime import datetime, timedelta
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, daily_counts, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
-
-
-def _daily_counts(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        daily[r.event_type][r.ts_us // _DAY_US] += 1
-    return daily
 
 
 def _cents_by_type(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     vals: dict[str, list[int]] = defaultdict(list)
     for r in ev:
-        vals[r.event_type].append(_half_away(r.value * 100))
+        vals[r.event_type].append(half_away(r.value * 100))
     return vals
 
 
@@ -191,7 +177,7 @@ def test_peaks_python_replay(spark):
         ts_peaks,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     got = {(r.event_type, r.day): r for r in ts_peaks(spark, SF_SMOKE).collect()}
     want = set()
     for et, dd in daily.items():
@@ -217,7 +203,7 @@ def test_ewvol_python_replay(spark):
         ts_ewvol,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     got = defaultdict(dict)
     for r in ts_ewvol(spark, SF_SMOKE).collect():
         got[r.event_type][r.day] = r
@@ -320,7 +306,7 @@ def test_naive_bayes_bruteforce_replay(spark):
     v = len(vocab)
 
     def lnmu(k: int) -> int:
-        return _half_away(math.log(k) * 1e6)
+        return half_away(math.log(k) * 1e6)
 
     conf: dict[tuple, int] = defaultdict(int)
     for d in docs:
@@ -360,13 +346,13 @@ def test_price_elasticity_python_replay(spark):
     pt = load_table(spark, SF_SMOKE, "part").collect()
     qty: dict[int, int] = defaultdict(int)
     for r in li:
-        qty[r.l_partkey] += _half_away(r.l_quantity)
+        qty[r.l_partkey] += half_away(r.l_quantity)
     groups: dict[str, list] = defaultdict(list)
     for p in pt:
         q = qty.get(p.p_partkey, 0)
         if q >= 1:
-            x = _half_away(math.log(_half_away(p.p_retailprice * 100)) * 1e6)
-            y = _half_away(math.log(q) * 1e6)
+            x = half_away(math.log(half_away(p.p_retailprice * 100)) * 1e6)
+            y = half_away(math.log(q) * 1e6)
             groups[p.p_brand].append((x, y))
     rows = {r.brand: r for r in part_price_elasticity(spark, SF_SMOKE).collect()}
     assert set(rows) == set(groups)
@@ -399,4 +385,4 @@ def test_croston_day_alignment(spark):
     for r in li:
         a = (r.l_shipdate - epoch) // timedelta(days=1)
         us = int((r.l_shipdate - epoch).total_seconds() * 1_000_000)
-        assert a == us // _DAY_US
+        assert a == us // DAY_US

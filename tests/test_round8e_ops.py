@@ -14,15 +14,9 @@ import math
 from collections import defaultdict, deque
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
 
 
 def _events(spark):
@@ -45,11 +39,11 @@ def test_mcnemar_python_replay(spark):
     )
 
     ev = _events(spark)
-    days = [r.ts_us // _DAY_US for r in ev]
+    days = [r.ts_us // DAY_US for r in ev]
     mid = (min(days) + max(days) + 1) // 2
     st: dict[int, list] = defaultdict(lambda: [0, 0, 0, 0])  # in1 in2 p1 p2
     for r in ev:
-        d = r.ts_us // _DAY_US
+        d = r.ts_us // DAY_US
         s = st[r.user_id]
         if d < mid:
             s[0] = 1
@@ -83,9 +77,9 @@ def test_effect_sizes_python_replay(spark):
     xs, ys = [], []
     for r in _events(spark):
         if r.event_type == "purchase":
-            xs.append(_half_away(r.value * 100))
+            xs.append(half_away(r.value * 100))
         elif r.event_type == "click":
-            ys.append(_half_away(r.value * 100))
+            ys.append(half_away(r.value * 100))
     n1, n2 = len(xs), len(ys)
     m1, m2 = sum(xs) / n1, sum(ys) / n2
     v1 = (sum(x * x for x in xs) - sum(xs) ** 2 / n1) / (n1 - 1)
@@ -159,7 +153,7 @@ def test_ht_estimate_python_replay(spark):
     m = 20
     truth = n_pop = n_smp = y_smp = y2 = 0
     for r in li:
-        cents = _half_away(r.l_extendedprice * (1 - r.l_discount) * 100)
+        cents = half_away(r.l_extendedprice * (1 - r.l_discount) * 100)
         n_pop += 1
         truth += cents
         key = r.l_orderkey * 100 + r.l_linenumber
@@ -250,7 +244,7 @@ def test_scd3_python_replay(spark):
         n_changes = -1
         for us, ok, val in seq:
             if prev is None or val != prev:
-                changes.append((us // _DAY_US, ok, val, prev))
+                changes.append((us // DAY_US, ok, val, prev))
                 n_changes += 1
             prev = val
         day, ok, val, pv = max(changes, key=lambda c: (c[0], c[1]))

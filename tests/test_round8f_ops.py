@@ -14,23 +14,9 @@ import math
 from collections import defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, daily_counts, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
-
-
-def _daily_counts(spark):
-    ev = load_table(spark, SF_SMOKE, "events").collect()
-    daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
-    for r in ev:
-        daily[r.event_type][r.ts_us // _DAY_US] += 1
-    return daily
 
 
 def test_matrix_profile_bruteforce_replay(spark):
@@ -38,7 +24,7 @@ def test_matrix_profile_bruteforce_replay(spark):
         ts_matrix_profile,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     got = defaultdict(dict)
     for r in ts_matrix_profile(spark, SF_SMOKE).collect():
         got[r.event_type][r.day] = r
@@ -73,7 +59,7 @@ def test_dominant_period_python_replay(spark):
         ts_dominant_period,
     )
 
-    daily = _daily_counts(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_dominant_period(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():
@@ -160,7 +146,7 @@ def test_neyman_allocation_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     groups: dict[str, list] = defaultdict(list)
     for r in ev:
-        groups[r.event_type].append(_half_away(r.value * 100))
+        groups[r.event_type].append(half_away(r.value * 100))
     stats = {}
     for et, xs in groups.items():
         nh = len(xs)
@@ -270,10 +256,10 @@ def test_design_effect_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     cl: dict[int, list] = defaultdict(list)
     for r in ev:
-        cl[r.user_id].append(_half_away(r.value * 100))
+        cl[r.user_id].append(half_away(r.value * 100))
     n = sum(len(v) for v in cl.values())
     k = len(cl)
-    q = sum(_half_away((sum(v) / len(v)) * sum(v) * 100) for v in cl.values())
+    q = sum(half_away((sum(v) / len(v)) * sum(v) * 100) for v in cl.values())
     tt = sum(sum(v) for v in cl.values())
     yy = sum(x * x for v in cl.values() for x in v)
     m2 = sum(len(v) ** 2 for v in cl.values())

@@ -9,13 +9,9 @@ import math
 from collections import defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
 
 
 def test_llr_collocations_python_replay(spark):
@@ -69,7 +65,7 @@ def test_logreg_irls_python_replay(spark):
     )
 
     ev = load_table(spark, SF_SMOKE, "events").collect()
-    xs = [_half_away(r.value * 100) for r in ev]
+    xs = [half_away(r.value * 100) for r in ev]
     ys = [1 if r.event_type == "purchase" else 0 for r in ev]
     n, p = len(xs), sum(ys)
     sx = sum(xs)
@@ -147,7 +143,7 @@ def test_topsis_python_replay(spark):
     agg = defaultdict(lambda: [0, set(), 0, 0])
     for r in load_table(spark, SF_SMOKE, "lineitem").collect():
         a = agg[r.l_suppkey]
-        a[0] += _half_away(r.l_extendedprice * (1 - r.l_discount) * 100)
+        a[0] += half_away(r.l_extendedprice * (1 - r.l_discount) * 100)
         a[1].add(r.l_orderkey)
         sd = (r.l_shipdate - epoch) // timedelta(days=1)
         a[2] += sd - od[r.l_orderkey]

@@ -9,15 +9,9 @@ import math
 from collections import defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
 
 
 def test_jb_fdr_python_replay(spark):
@@ -28,8 +22,8 @@ def test_jb_fdr_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     cells: dict[tuple, list] = defaultdict(list)
     for r in ev:
-        wd = (r.ts_us // _DAY_US + 4) % 7
-        cells[(r.event_type, wd)].append(_half_away(r.value * 100))
+        wd = (r.ts_us // DAY_US + 4) % 7
+        cells[(r.event_type, wd)].append(half_away(r.value * 100))
     stats = {}
     for key, xs in cells.items():
         n = len(xs)
@@ -77,7 +71,7 @@ def test_pinball_eval_python_replay(spark):
     ev = load_table(spark, SF_SMOKE, "events").collect()
     daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
     for r in ev:
-        daily[r.event_type][r.ts_us // _DAY_US] += 1
+        daily[r.event_type][r.ts_us // DAY_US] += 1
     got = defaultdict(dict)
     for r in ts_pinball_eval(spark, SF_SMOKE).collect():
         got[r.event_type][r.q_level] = r
@@ -119,7 +113,7 @@ def test_rp_sketch_python_replay(spark):
     }
 
     def quant(v):
-        return [_half_away(x * 1000) if x >= 0 else -_half_away(-x * 1000) for x in v]
+        return [half_away(x * 1000) if x >= 0 else -half_away(-x * 1000) for x in v]
 
     def signs(d):  # d is 1-based
         h = (d * 2654435761) % 2147483648

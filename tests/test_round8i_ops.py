@@ -5,21 +5,16 @@ Cramér-von Mises.
 
 from __future__ import annotations
 
-import math
 from collections import Counter, defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
 
 
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
-
-
 def _cents(rows):
-    return [(r.event_type, _half_away(r.value * 100), r.event_id) for r in rows]
+    return [(r.event_type, half_away(r.value * 100), r.event_id) for r in rows]
 
 
 def test_kruskal_wallis_python_replay(spark):

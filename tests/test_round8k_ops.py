@@ -7,25 +7,11 @@ from __future__ import annotations
 
 import math
 from bisect import bisect_right
-from collections import defaultdict
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, daily_counts, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
-
-
-def _daily(spark):
-    daily: dict[str, dict[int, int]] = defaultdict(lambda: defaultdict(int))
-    for r in load_table(spark, SF_SMOKE, "events").collect():
-        daily[r.event_type][r.ts_us // _DAY_US] += 1
-    return daily
 
 
 def test_emd_python_replay(spark):
@@ -35,10 +21,10 @@ def test_emd_python_replay(spark):
 
     ev = load_table(spark, SF_SMOKE, "events").collect()
     c1s = sorted(
-        _half_away(r.value * 100) for r in ev if r.event_type == "purchase"
+        half_away(r.value * 100) for r in ev if r.event_type == "purchase"
     )
     c2s = sorted(
-        _half_away(r.value * 100) for r in ev if r.event_type == "view"
+        half_away(r.value * 100) for r in ev if r.event_type == "view"
     )
     xs = sorted(set(c1s) | set(c2s))
     n1, n2 = len(c1s), len(c2s)
@@ -64,7 +50,7 @@ def test_theil_sen_python_replay(spark):
         ts_theil_sen,
     )
 
-    daily = _daily(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_theil_sen(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():
@@ -90,7 +76,7 @@ def test_durbin_watson_python_replay(spark):
         ts_durbin_watson,
     )
 
-    daily = _daily(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_durbin_watson(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():
@@ -120,7 +106,7 @@ def test_ar1_halflife_python_replay(spark):
         ts_ar1_halflife,
     )
 
-    daily = _daily(spark)
+    daily = daily_counts(spark)
     rows = {r.event_type: r for r in ts_ar1_halflife(spark, SF_SMOKE).collect()}
     assert set(rows) == set(daily)
     for et, dd in daily.items():

@@ -18,15 +18,9 @@ from collections import defaultdict
 from datetime import datetime, timezone
 
 import pytest
-from conftest import SF_SMOKE
+from conftest import DAY_US, SF_SMOKE, half_away
 
 from wikipedia_org_xmldump_importer_spark.io import load_table
-
-_DAY_US = 86_400_000_000
-
-
-def _half_away(x: float) -> int:
-    return int(math.floor(x + 0.5))
 
 
 def _doubled_midranks(values):
@@ -81,7 +75,7 @@ def test_friedman_python_replay(spark):
     daily: dict[tuple[int, str], int] = defaultdict(int)
     days, types = set(), set()
     for r in load_table(spark, SF_SMOKE, "events").collect():
-        day = r.ts_us // _DAY_US
+        day = r.ts_us // DAY_US
         daily[(day, r.event_type)] += 1
         days.add(day)
         types.add(r.event_type)
@@ -115,12 +109,12 @@ def test_jonckheere_terpstra_python_replay(spark):
 
     groups: dict[int, list[int]] = defaultdict(list)
     for r in load_table(spark, SF_SMOKE, "events").collect():
-        wd = (r.ts_us // _DAY_US + 3) % 7
+        wd = (r.ts_us // DAY_US + 3) % 7
         # Mon=0 contract cross-checked against the calendar itself:
         assert wd == datetime.fromtimestamp(
             r.ts_us / 1e6, tz=timezone.utc
         ).weekday()
-        groups[wd].append(_half_away(r.value * 100))
+        groups[wd].append(half_away(r.value * 100))
     for g in groups.values():
         g.sort()
     wds = sorted(groups)
